@@ -1,0 +1,6 @@
+"""Seeded end-to-end and per-layer benchmark for grokspark.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; ``perfbench/README.md`` lists
+the workloads and every metric.
+"""
