@@ -9,6 +9,8 @@ Prints one JSON line {scenario: microseconds_per_op} and, with
 from __future__ import annotations
 
 import json
+import os
+import platform
 import sys
 import time
 
@@ -25,6 +27,11 @@ APACHE_EXPR = (
     r"%{IPORHOST:clientip} %{USER:ident} %{USER:auth} \[%{HTTPDATE:timestamp}\] "
     r'"(?:%{WORD:verb} %{NOTSPACE:request}(?: HTTP/%{NUMBER:httpversion})?|%{DATA:rawrequest})" '
     r"%{NUMBER:response} (?:%{NUMBER:bytes}|-) %{QS:referrer} %{QS:agent}"
+)
+ELB_LINE = (
+    "2015-05-13T23:39:43.945958Z my-loadbalancer 192.168.131.39:2817 "
+    "10.0.0.1:80 0.000073 0.001048 0.000057 200 200 0 29 "
+    '"GET https://example.com:443/ HTTP/1.1"'
 )
 LOG_EXPR = (
     r"%{TIMESTAMP_ISO8601:timestamp} \[%{IPV4:ip}:%{WORD:environment}\] "
@@ -60,6 +67,8 @@ def scenarios() -> dict[str, float]:
     nomatch_middle = APACHE_LINE.replace('"GET', "_GET", 1)
     nomatch_end = APACHE_LINE[:-1] + "\x00"
     out["apache_match"] = bench(lambda: apache.match_against(APACHE_LINE))
+    # the capture-free twin (is_match): what route_match_counts runs
+    out["apache_match_only"] = bench(lambda: apache.is_match(APACHE_LINE))
     out["apache_match_anchored"] = bench(lambda: apache_anch.match_against(APACHE_LINE))
     out["apache_no_match_start"] = bench(lambda: apache.match_against(nomatch_start))
     out["apache_no_match_middle"] = bench(lambda: apache.match_against(nomatch_middle))
@@ -67,6 +76,10 @@ def scenarios() -> dict[str, float]:
     out["apache_no_match_start_anchored"] = bench(
         lambda: apache_anch.match_against(nomatch_start)
     )
+
+    elb = g.compile("%{ELB_ACCESS_LOG}")
+    out["elb_match"] = bench(lambda: elb.match_against(ELB_LINE))
+    out["elb_match_only"] = bench(lambda: elb.is_match(ELB_LINE))
 
     log = g.compile(LOG_EXPR)
     log_anch = g.compile("^" + LOG_EXPR + "$")
@@ -130,6 +143,18 @@ def scenarios() -> dict[str, float]:
     return out
 
 
+def _cpu_model() -> str:
+    """The CPU model name from /proc/cpuinfo (Linux), else platform's."""
+    try:
+        with open("/proc/cpuinfo", encoding="utf-8") as f:
+            for line in f:
+                if line.startswith("model name"):
+                    return line.split(":", 1)[1].strip()
+    except OSError:
+        pass
+    return platform.processor() or "unknown CPU"
+
+
 def main() -> None:
     out = {k: round(v, 2) for k, v in scenarios().items()}
     print(json.dumps(out))
@@ -139,6 +164,9 @@ def main() -> None:
         lines = ["# BENCH/MICRO — kernel micro-benchmarks", "",
                  "Single-core, compiled pattern reused (the reference's divan",
                  "protocol, /root/reference/benches/). Values are µs/op.", "",
+                 "`*_match_only` runs the capture-free twin (`is_match`).", "",
+                 f"Recorded on: {_cpu_model()}, {os.cpu_count()} logical CPUs, "
+                 f"Python {platform.python_version()}.", "",
                  "| scenario | µs/op |", "|---|---|"]
         for k, v in out.items():
             lines.append(f"| {k} | {v} |")

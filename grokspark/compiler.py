@@ -10,6 +10,8 @@ observable IR as the reference compiler (algorithm behavior of
 Executor-side: :class:`CompiledPattern` is a small picklable spec
 ``(regex_src, aliases, extracts)``; the actual third-party ``regex``
 pattern object is compiled lazily once per Python worker and cached.
+Match-only callers (``is_match``) get a capture-free twin of that
+pattern, compiled lazily on first use and cached next to it.
 
 Semantics preserved from the reference (each covered by tests):
 - every expanded placeholder becomes a uniquely named group ``_n_<i>``
@@ -122,13 +124,36 @@ class _NotSreExpressible(Exception):
     bracket classes, whose Unicode semantics sre cannot reproduce)."""
 
 
-def _to_sre_source(regex_src: str) -> str:
+class _HasGroupReference(Exception):
+    """The pattern refers to a group (backreference, subroutine call,
+    conditional, recursion, branch reset), so it has no capture-free
+    twin: dropping the captures would change what it matches."""
+
+
+# group references outside bracket classes: named backreference and
+# subroutine calls, conditionals, recursion, branch reset, and numbered
+# or relative calls such as (?1), (?+1), (?-1)
+_GROUP_REF_OPENERS = ("(?P=", "(?P>", "(?&", "(?(", "(?R", "(?|")
+_GROUP_CALL = _sre.compile(r"\(\?(?:[+-]?[0-9]|<[0-9])")
+
+
+def _to_sre_source(
+    regex_src: str, capture_free: bool = False, flavor: str = "sre"
+) -> str:
     """Translate the compiler's IR dialect to stdlib-re syntax:
     ``(?<name>`` -> ``(?P<name>``, preserving lookbehinds. Raises
     :class:`_NotSreExpressible` for POSIX classes inside a bracket
     expression — their reference semantics are Unicode-aware
     (``[[:alpha:]]`` matches 'é'), which no mechanical sre rewrite can
     reproduce, so those patterns stay on the regex engine.
+
+    ``capture_free=True`` instead emits ``(?:`` for every capturing
+    group (``(?<name>``, ``(?P<name>`` and a bare ``(``): the pattern's
+    match-only twin. Whether a regex matches does not depend on which
+    groups capture, so the twin is exact as long as nothing refers to a
+    group; any group reference raises :class:`_HasGroupReference`.
+    ``flavor="regex"`` keeps the reference dialect for a twin compiled
+    on the regex engine (POSIX classes pass through).
 
     Context-aware: a single pass tracks escapes and bracket-class state,
     so literal occurrences of these sequences keep their reference
@@ -142,11 +167,16 @@ def _to_sre_source(regex_src: str) -> str:
     while i < n:
         c = regex_src[i]
         if c == "\\" and i + 1 < n:
+            if capture_free and (
+                regex_src[i + 1] in "123456789"
+                or regex_src.startswith(("k<", "g<"), i + 1)
+            ):
+                raise _HasGroupReference(regex_src[i : i + 3])
             out.append(regex_src[i : i + 2])
             i += 2
             continue
         if in_class:
-            if c == "[" and regex_src.startswith("[:", i):
+            if c == "[" and flavor == "sre" and regex_src.startswith("[:", i):
                 end = regex_src.find(":]", i + 2)
                 if end != -1:
                     # [[:alpha:]], [[:^digit:]], ... — Unicode-aware on
@@ -170,14 +200,25 @@ def _to_sre_source(regex_src: str) -> str:
                 out.append("]")
                 i += 1
             continue
-        if (
-            c == "("
-            and regex_src.startswith("(?<", i)
-            and not regex_src.startswith(("(?<=", "(?<!"), i)
-        ):
-            out.append("(?P<")
-            i += 3
-            continue
+        if c == "(":
+            lookbehind = regex_src.startswith(("(?<=", "(?<!"), i)
+            if capture_free:
+                if regex_src.startswith(_GROUP_REF_OPENERS, i) or _GROUP_CALL.match(
+                    regex_src, i
+                ):
+                    raise _HasGroupReference(regex_src[i : i + 4])
+                if regex_src.startswith(("(?<", "(?P<"), i) and not lookbehind:
+                    out.append("(?:")
+                    i = regex_src.index(">", i) + 1
+                    continue
+                if not regex_src.startswith(("(?", "(*"), i):  # (* is a verb
+                    out.append("(?:")
+                    i += 1
+                    continue
+            elif flavor == "sre" and regex_src.startswith("(?<", i) and not lookbehind:
+                out.append("(?P<")
+                i += 3
+                continue
         out.append(c)
         i += 1
     return "".join(out)
@@ -196,6 +237,9 @@ class _EnginePattern:
     # the reference engine pattern (regex module), compiled on demand
     # when a per-call timeout is requested (sre has no timeout support)
     ref_pattern: object = None
+    # the capture-free twin of ``pattern``, compiled on demand by the
+    # first match-only search
+    twin_pattern: object = None
 
     def timeout_pattern(self):
         """The engine pattern whose ``search`` accepts ``timeout=``.
@@ -208,6 +252,36 @@ class _EnginePattern:
             object.__setattr__(self, "ref_pattern", _regex.compile(self.regex_src))
         return self.ref_pattern
 
+    def match_pattern(self):
+        """The capture-free twin of ``pattern``, on the same engine
+        flavor: its ``search`` is None exactly when ``pattern``'s is,
+        without the cost of recording captures. A pattern with a group
+        reference (or a twin its engine rejects) is its own twin.
+        Compiled lazily on first use, i.e. only on workers that run a
+        match-only path, and cached with this engine pattern."""
+        if self.twin_pattern is None:
+            try:
+                src = _to_sre_source(
+                    self.regex_src, capture_free=True, flavor=self.flavor
+                )
+                twin = (
+                    _sre_compile(src) if self.flavor == "sre" else _regex.compile(src)
+                )
+            except (_HasGroupReference, ValueError, _sre.error, _regex.error):
+                twin = self.pattern
+            object.__setattr__(self, "twin_pattern", twin)
+        return self.twin_pattern
+
+
+def _sre_compile(src: str):
+    import warnings
+
+    with warnings.catch_warnings():
+        # literal '[' inside classes triggers a benign
+        # "possible nested set" FutureWarning
+        warnings.simplefilter("ignore", FutureWarning)
+        return _sre.compile(src)
+
 
 def _compile_preferred(regex_src: str):
     """Compile on the fastest engine whose semantics hold; returns
@@ -217,13 +291,7 @@ def _compile_preferred(regex_src: str):
     both engines)."""
     if _ENGINE_PREF != "regex":
         try:
-            import warnings
-
-            with warnings.catch_warnings():
-                # literal '[' inside classes triggers a benign
-                # "possible nested set" FutureWarning
-                warnings.simplefilter("ignore", FutureWarning)
-                sre_pat = _sre.compile(_to_sre_source(regex_src))
+            sre_pat = _sre_compile(_to_sre_source(regex_src))
         except Exception:  # noqa: BLE001 — dialect not sre-expressible
             sre_pat = None
         if sre_pat is not None:
@@ -329,6 +397,15 @@ class CompiledPattern:
                 )
             return self.engine.timeout_pattern().search(text, timeout=timeout)
         return self.engine.pattern.search(text)
+
+    def is_match(self, text: str, timeout: Optional[float] = None) -> bool:
+        """``search(text, timeout) is not None``, without recording
+        captures: runs the pattern's capture-free twin. A timeout routes
+        through the reference engine as in ``search`` (and raises
+        ``TimeoutError`` the same way)."""
+        if timeout is not None:
+            return self.search(text, timeout=timeout) is not None
+        return self.engine.match_pattern().search(text) is not None
 
     def match_against(self, text: str, timeout: Optional[float] = None) -> Optional["Matches"]:
         """Match and return a ``Matches`` dict of ``{key: value}`` for

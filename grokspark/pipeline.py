@@ -25,12 +25,15 @@ Dataflow (all Catalyst-planned except the fused parse kernel):
    so not disk). Reach for salting only when per-row parse cost varies
    wildly by key AND keys are file-clustered; prefer re-splitting the
    input otherwise. AQE skew-join splitting stays on for the join side.
-4. **Parse**: per route-pattern, the fused tokens→map pandas UDF
-   (grokspark.udfs) — one JVM↔Python Arrow round trip per batch,
-   regex compiled once per worker. ``matched = fields IS NOT NULL``
+4. **Parse**: the sink path runs the fused tokens→map router pandas
+   UDF (grokspark.udfs; per-pattern mode runs one map UDF per
+   pattern) — one JVM↔Python Arrow round trip per batch, regex
+   compiled once per worker. ``matched = fields IS NOT NULL``
    reproduces the reference's Option<Matches> exactly. The original
    ``tokens`` column passes through untouched (per-row token-array
-   equality invariant — never re-encoded from text).
+   equality invariant — never re-encoded from text). The counts-only
+   headline ``route_match_counts`` reads no fields, so it runs the
+   match-only ``mapInArrow`` kernel instead.
 5. **Fan-out sinks**: per (route, pattern) parquet sink, written via a
    staging directory + atomic rename so a crashed unit never leaves
    half-committed rows (the Iceberg-snapshot-commit analogue; with an
@@ -216,9 +219,16 @@ def route_match_counts(
     dispatch happens inside the kernel (dict lookup) instead of as N
     filtered plan branches (N scans). The kernel runs via mapInArrow:
     the token lists cross the JVM->Python boundary as one flat Arrow
-    buffer + offsets, decoded with a single slice per row (the pandas
-    bridge would materialize a numpy array per row, which costs more
-    than the regex match itself — measured +20% end-to-end). No
+    buffer + offsets, decoded once per ASCII batch (the pandas bridge
+    would materialize a numpy array per row, which costs more than the
+    regex match itself — measured +20% end-to-end).
+
+    The query is match-only: nothing reads the captured fields, so the
+    kernel runs with ``with_fields=False``. It searches with each
+    pattern's capture-free twin and ships back only ``route, matched``;
+    whether a line matches is the same as with captures, so the counts
+    are those of the reference's ``match_against(...) is not None``.
+    Field extraction happens only on the sink path (``GrokPipeline``). No
     pre-parse shuffle by default — the scan splitter balances bytes per
     task; pass ``salt_buckets`` to force a salted repartition for
     file-clustered pathological skew (costs a row->Arrow conversion,
@@ -242,7 +252,7 @@ def route_match_counts(
             F.col("source"),
             F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
         )
-    kernel, ddl = grok_parse_arrow_kernel(compiled_by_name)
+    kernel, ddl = grok_parse_arrow_kernel(compiled_by_name, with_fields=False)
     return (
         enriched.select("route", "pattern_name", "tokens")
         .mapInArrow(kernel, ddl)
@@ -590,12 +600,14 @@ class GrokPipeline:
                 continue
             pending.append((i, unit, unit_files, files_sig))
 
-        def run_unit(i: int, unit: str, unit_files: list) -> dict:
-            """Scan, parse, stage-write and PUBLISH one range; returns
-            its observe metrics. Touches only unit-local paths, so
-            units can run concurrently (staging dirs and publish
-            destinations are keyed by unit; parent makedirs are
-            exist_ok)."""
+        def run_unit(
+            i: int, unit: str, unit_files: list, files_sig: str
+        ) -> tuple[dict, list[dict]]:
+            """Scan, parse, stage-write, PUBLISH and mark one range;
+            returns its observe metrics and lineage. Touches only
+            unit-local paths, so units can run concurrently (staging
+            dirs and publish destinations are keyed by unit; parent
+            makedirs are exist_ok; manifest marks are lock-serialized)."""
             df = self.spark.read.parquet(*unit_files)
             parsed = (
                 df.join(routes_df, "source", "left")
@@ -649,7 +661,23 @@ class GrokPipeline:
 
             if cfg.write_sinks:
                 self._publish_range(unit, i)
-            return metrics
+            lineage = []
+            for p in patterns:
+                rows_in = metrics[f"m__{p}"] + metrics[f"u__{p}"]
+                if rows_in:
+                    lineage.append(
+                        {
+                            "pattern_name": p,
+                            "part_id": i,
+                            "rows_in": rows_in,
+                            "rows_matched": metrics[f"m__{p}"],
+                            "rows_timeout": metrics[f"t__{p}"],
+                        }
+                    )
+            # marked as soon as the range is published: a later range's
+            # failure must not make this one re-run on resume
+            manifest.mark(unit, metrics=metrics, lineage=lineage, files_sig=files_sig)
+            return metrics, lineage
 
         # Overlap the independent range jobs from a small driver thread
         # pool (each range's scan covers only its file slice, so a
@@ -657,13 +685,10 @@ class GrokPipeline:
         # left most cores idle — measured 5.7 s -> ~2.5 s for 4 ranges
         # of a 100k-row input at local[32]). Spark's scheduler runs
         # concurrent jobs FIFO, which is exactly the tail back-fill
-        # behavior wanted here. Manifest marking and result
-        # accumulation happen AFTER the pool, in range order: lineage
-        # output order stays deterministic, and a unit is marked done
-        # only once its publish succeeded (same crash exposure as the
-        # sequential loop — a published-but-unmarked range just
-        # republishes on resume, which _publish_range makes
-        # idempotent).
+        # behavior wanted here. Each unit marks the manifest itself
+        # right after its publish; only result accumulation waits for
+        # the pool, in range order, so lineage output order stays
+        # deterministic.
         if pending:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -671,27 +696,11 @@ class GrokPipeline:
                 max_workers=min(4, len(pending))
             ) as pool:
                 futs = [
-                    (i, unit, files_sig, pool.submit(run_unit, i, unit, unit_files))
+                    (unit, pool.submit(run_unit, i, unit, unit_files, files_sig))
                     for i, unit, unit_files, files_sig in pending
                 ]
-            for i, unit, files_sig, fut in futs:
-                metrics = fut.result()
-                lineage = []
-                for p in patterns:
-                    rows_in = metrics[f"m__{p}"] + metrics[f"u__{p}"]
-                    if rows_in:
-                        entry = {
-                            "pattern_name": p,
-                            "part_id": i,
-                            "rows_in": rows_in,
-                            "rows_matched": metrics[f"m__{p}"],
-                            "rows_timeout": metrics[f"t__{p}"],
-                        }
-                        lineage.append(entry)
-                accumulate(unit, metrics, lineage)
-                manifest.mark(
-                    unit, metrics=metrics, lineage=lineage, files_sig=files_sig
-                )
+            for unit, fut in futs:
+                accumulate(unit, *fut.result())
 
     def _validate_ranged_input(self, seq_df: DataFrame) -> list[str]:
         """Ranged mode re-plans the scan per file-range, so the input

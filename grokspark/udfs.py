@@ -9,22 +9,32 @@ back. The compiled pattern travels as a small picklable spec inside the
 UDF closure and is engine-compiled once per worker process
 (see grokspark.compiler._ENGINE_CACHE).
 
-Two parse representations:
+Three result shapes, chosen by what the caller reads:
 
-- ``grok_parse_map_udf``  -> ``map<string,string>`` of *participating*
-  captures only, NULL on whole-line no-match. This mirrors the
-  reference API exactly (``match_against`` returning ``Option<Matches>``,
-  ``Matches::iter()`` yielding participating groups) and is the scale
-  path: a 163-capture pattern with 9 participating groups ships 9 map
-  entries, not 163 mostly-null struct fields.
+- ``map<string,string>`` of *participating* captures only, NULL on
+  whole-line no-match (``grok_parse_map_udf``, the multi-pattern
+  ``grok_parse_router_udf`` / ``grok_parse_router_status_udf`` of the
+  sink path, and ``grok_parse_arrow_kernel`` with ``with_fields=True``).
+  This mirrors the reference API exactly (``match_against`` returning
+  ``Option<Matches>``, ``Matches::iter()`` yielding participating
+  groups): a 163-capture pattern with 9 participating groups ships 9
+  map entries, not 163 mostly-null struct fields.
 
-- ``grok_parse_struct_udf`` -> one nullable StringType field per capture
-  key plus a ``_matched`` boolean. Schema-on-parse for downstream SQL.
+- a struct with one nullable StringType field per capture key plus a
+  ``_matched`` boolean (``grok_parse_struct_udf``). Schema-on-parse for
+  downstream SQL.
 
-Both have fused token-array variants that decode ``array<int32>``
-(byte-level vocab) to text inside the same kernel, so detokenize+parse
-costs a single JVM<->Python round trip and the rendered line never
-materializes in the JVM.
+- a match flag only (``grok_match_udf``, and ``grok_parse_arrow_kernel``
+  with ``with_fields=False``, which the counts headline
+  ``route_match_counts`` runs). These search with the pattern's
+  capture-free twin (``_EnginePattern.match_pattern``, also behind
+  ``CompiledPattern.is_match``), which matches exactly when the
+  capturing pattern does but records no groups, and they build no maps.
+
+Every parse kernel can take the ``array<int32>`` (byte-level vocab)
+tokens and decode them to text inside the same kernel, so
+detokenize+parse costs a single JVM<->Python round trip and the
+rendered line never materializes in the JVM.
 """
 
 from __future__ import annotations
@@ -195,11 +205,16 @@ def grok_parse_struct_udf(
     return parse
 
 
-def _router_rt_factory(specs: dict, timeout: Optional[float]):
+def _router_rt_factory(
+    specs: dict, timeout: Optional[float], with_fields: bool = True
+):
     """Per-worker lazy engine compile: pattern name -> hot tuple
     (search fn, group indices, sorted keys), or False for unknown/NULL
-    pattern names (unroutable rows). Shared by both router UDFs so
-    timeout/no-match semantics cannot drift between them."""
+    pattern names (unroutable rows). Shared by the router UDFs and the
+    Arrow kernel so timeout/no-match semantics cannot drift between
+    them. ``with_fields=False`` searches with the capture-free twin; a
+    timeout always goes through the reference engine's capturing
+    pattern, so a row times out on the same pattern in both modes."""
     runtime: dict = {}
 
     def rt_for(name):
@@ -210,7 +225,10 @@ def _router_rt_factory(specs: dict, timeout: Optional[float]):
                 runtime[name] = False
                 return False
             eng = spec.engine
-            pat = eng.timeout_pattern() if timeout else eng.pattern
+            if timeout:
+                pat = eng.timeout_pattern()
+            else:
+                pat = eng.pattern if with_fields else eng.match_pattern()
             rt = (pat.search, eng.indices, eng.sorted_names)
             runtime[name] = rt
         return rt
@@ -305,6 +323,18 @@ def grok_parse_router_status_udf(
     return parse
 
 
+def _line_texts(flat: bytes, offsets: list[int]) -> list[str]:
+    """Every row's text from one flat byte buffer and its row offsets.
+    An all-ASCII buffer is decoded once and sliced as ``str``;
+    otherwise each row decodes its own slice, with invalid UTF-8 bytes
+    replaced as in ``_tokens_to_text``."""
+    bounds = zip(offsets[:-1], offsets[1:])
+    if flat.isascii():
+        text = flat.decode("ascii")
+        return [text[a:b] for a, b in bounds]
+    return [flat[a:b].decode("utf-8", errors="replace") for a, b in bounds]
+
+
 def grok_parse_arrow_kernel(
     compiled_by_name: dict[str, CompiledPattern],
     timeout: Optional[float] = None,
@@ -316,12 +346,20 @@ def grok_parse_arrow_kernel(
     The pandas bridge materializes one numpy array per row for the
     ``tokens`` column (list<int32>), which costs more than the regex
     match itself. Arrow batches expose the same data as ONE flat values
-    buffer + offsets, so this kernel decodes every line with a single
-    buffer slice per row and never builds per-row arrays.
+    buffer + offsets, so this kernel decodes a batch with one
+    ``decode`` when the buffer is ASCII (one per row otherwise) and
+    never builds per-row arrays. The ``route`` column passes through
+    as the same Arrow array.
+
+    ``with_fields=False`` is the match-only kernel: it searches with
+    each pattern's capture-free twin (``_EnginePattern.match_pattern``)
+    and builds no ``fields`` maps. Its ``matched`` column equals the
+    ``with_fields=True`` one.
 
     Input batch columns:  route, pattern_name, tokens (list<int32>)
     Output batch columns: route string, matched boolean
                           [+ fields map<string,string> if with_fields]
+                          [+ timed_out boolean if with_status]
 
     Returns ``(kernel, ddl_schema_string)`` for
     ``DataFrame.mapInArrow(kernel, ddl)``.
@@ -344,43 +382,40 @@ def grok_parse_arrow_kernel(
     out_schema = pa.schema(out_fields)
 
     def kernel(batches):
-        rt_for = _router_rt_factory(specs, timeout)
+        rt_for = _router_rt_factory(specs, timeout, with_fields)
 
         for batch in batches:
             tokens = batch.column(batch.schema.get_field_index("tokens"))
             if isinstance(tokens, pa.ChunkedArray):
                 tokens = tokens.combine_chunks()
             # flatten list<int32> -> one contiguous byte buffer + offsets
-            offsets = tokens.offsets.to_numpy(zero_copy_only=False)
+            offsets = tokens.offsets.to_numpy(zero_copy_only=False).tolist()
             flat = (
                 tokens.values.to_numpy(zero_copy_only=False)
                 .astype(np.uint8, copy=False)
                 .tobytes()
             )
+            texts = _line_texts(flat, offsets)
+            if tokens.null_count:
+                # NULL tokens entries must parse as no-match, not as ''
+                # (the flat buffer slice of a null list element is
+                # empty, and patterns like bare GREEDYDATA match empty
+                # text)
+                valid = tokens.is_valid().to_numpy(zero_copy_only=False)
+                for i in np.flatnonzero(~valid).tolist():
+                    texts[i] = None
             names = batch.column("pattern_name").to_pylist()
-            routes = batch.column("route").to_pylist()
-            # NULL tokens entries must parse as no-match, not as '' (the
-            # flat buffer slice of a null list element is empty, and
-            # patterns like bare GREEDYDATA match empty text)
-            valid = (
-                tokens.is_valid().to_numpy(zero_copy_only=False)
-                if tokens.null_count
-                else None
-            )
 
             matched = np.zeros(len(batch), dtype=bool)
             timed = np.zeros(len(batch), dtype=bool) if with_status else None
             fields_out = [] if with_fields else None
-            for i, name in enumerate(names):
+            for i, (name, text) in enumerate(zip(names, texts)):
                 rt = rt_for(name)
-                if rt is False or (valid is not None and not valid[i]):
+                if rt is False or text is None:
                     if with_fields:
                         fields_out.append(None)
                     continue
                 search, indices, keys = rt
-                text = flat[offsets[i] : offsets[i + 1]].decode(
-                    "utf-8", errors="replace"
-                )
                 try:
                     m = (
                         search(text, timeout=timeout) if timeout else search(text)
@@ -411,7 +446,9 @@ def grok_parse_arrow_kernel(
                     else:
                         fields_out.append([])
 
-            cols = [pa.array(routes, pa.string()), pa.array(matched)]
+            # zero-copy for string; also accepts large_string routes
+            # (spark.sql.execution.arrow.useLargeVarTypes)
+            cols = [batch.column("route").cast(pa.string()), pa.array(matched)]
             if with_fields:
                 cols.append(pa.array(fields_out, pa.map_(pa.string(), pa.string())))
             if with_status:
@@ -426,8 +463,9 @@ def grok_match_udf(
     from_tokens: bool = False,
     timeout: Optional[float] = None,
 ) -> "pandas_udf":
-    """Boolean match test (no capture extraction) — cheapest kernel for
-    pure routing/filtering."""
+    """Boolean match test — cheapest kernel for pure routing/filtering:
+    it runs the pattern's capture-free twin (``CompiledPattern.
+    is_match``), so no captures are recorded. A timeout is False."""
     timeout = _validate_timeout(timeout)
     spec = compiled
 
@@ -435,7 +473,7 @@ def grok_match_udf(
         if s is None:
             return False
         try:
-            return spec.search(s, timeout=timeout) is not None
+            return spec.is_match(s, timeout=timeout)
         except TimeoutError:
             return False
 

@@ -243,6 +243,63 @@ def test_ranged_mode_resume_per_range(spark, seq_parquet, oracle, tmp_path):
     assert third.sink_counts == first.sink_counts
 
 
+def test_ranged_mode_marks_published_range_before_a_later_range_fails(
+    spark, seq_parquet, oracle, tmp_path, monkeypatch
+):
+    """Fault injection: range 1 raises after range 0 has published.
+    range_0000 is marked done as soon as it is published, before range
+    1 fails, so a resumed run skips it, redoes the rest, and reports
+    the counts of a clean run."""
+    import json
+    import os
+    import threading
+
+    from grokspark import pipeline as P
+
+    marked = threading.Event()
+    mark = P._Manifest.mark
+    publish = GrokPipeline._publish_range
+    seen = {}
+
+    def watching_mark(self, unit, **record):
+        mark(self, unit, **record)
+        if unit == "range_0000":
+            marked.set()
+
+    def failing_publish(self, unit, range_id):
+        if range_id == 1:
+            # the ranges run concurrently; fail only once range 0 has
+            # published (and, if the fix holds, been marked)
+            seen["range_0000_marked"] = marked.wait(60)
+            raise RuntimeError("injected publish failure")
+        publish(self, unit, range_id)
+
+    out_dir = str(tmp_path / "ranged")
+    src = spark.read.parquet(seq_parquet)
+    cfg = PipelineConfig(out_dir=out_dir, range_units=3)
+    monkeypatch.setattr(P._Manifest, "mark", watching_mark)
+    monkeypatch.setattr(GrokPipeline, "_publish_range", failing_publish)
+    with pytest.raises(RuntimeError, match="injected"):
+        GrokPipeline(spark, cfg).run(src)
+    monkeypatch.undo()
+    assert seen["range_0000_marked"]
+
+    with open(os.path.join(out_dir, "manifest.json")) as f:
+        state = json.load(f)
+    assert state["range_0000"]["status"] == "done"
+    assert "range_0001" not in state
+
+    resumed = GrokPipeline(spark, cfg).run(src)
+    assert "range_0000" in resumed.skipped_units
+    assert "range_0001" not in resumed.skipped_units
+    assert resumed.sink_counts == oracle["sink_counts"]
+    assert resumed.unroutable_count == oracle["unroutable"]
+    assert resumed.rows_in == N_ROWS
+    assert sum(li["rows_in"] for li in resumed.lineage) == N_ROWS - oracle["unroutable"]
+    web = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/sinks/web/*/*")
+    assert web.count() == sum(oracle["sink_counts"]["web"].values())
+
+
 def test_ranged_mode_timeout_lineage(spark, tmp_path):
     """A hostile line under a per-row timeout is reported as
     rows_timeout in lineage — distinct from genuine no-matches — and

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from grokspark import GrokRegistry, grok_split
+from grokspark import compiler as C
 from grokspark.pattern_parser import GrokPattern, GrokPatternError, RegularExpression
 
 NAME = st.text(string.ascii_letters + string.digits + "_", min_size=1, max_size=12)
@@ -168,3 +170,131 @@ def test_simhash_batch_matches_scalar_reference(texts):
         hb = _fnv1a_batch(words)
         he = np.array([_fnv1a(w.decode("utf-8")) for w in words], dtype=np.uint64)
         assert (hb == he).all()
+
+
+# -- capture-free twin: match-only search is exact ----------------------------
+
+
+def _drop_last(line: str, chars: str) -> str:
+    """``line`` without its last occurrence of any of ``chars`` — a
+    closing quote or bracket goes missing, so matching fails late."""
+    i = max(line.rfind(c) for c in chars)
+    return line if i < 0 else line[:i] + line[i + 1 :]
+
+
+def _twin_lines() -> list[str]:
+    from grokspark.datagen import row_for
+
+    lines = [bytes(row_for(i)["tokens"]).decode("utf-8") for i in range(120)]
+    late = [_drop_last(line, "\"]") for line in lines]
+    return lines + [x for x in late if x not in lines] + ["", " ", "é ü 中"]
+
+
+TWIN_LINES = _twin_lines()
+_REGISTRY = GrokRegistry.with_default_patterns()
+_TWIN_COMPILED: dict = {}
+
+
+def _compiled(name: str, alias_only: bool):
+    key = (name, alias_only)
+    if key not in _TWIN_COMPILED:
+        _TWIN_COMPILED[key] = _REGISTRY.compile("%{" + name + "}", alias_only)
+    return _TWIN_COMPILED[key]
+
+
+def _assert_twin_agrees(compiled, text: str) -> None:
+    eng = compiled.engine
+    want = eng.pattern.search(text) is not None
+    assert (eng.match_pattern().search(text) is not None) == want, (
+        compiled.regex_src[:80],
+        text,
+    )
+    assert compiled.is_match(text) == want
+
+
+def test_twin_exact_on_every_default_pattern():
+    """All 640 default compilations (every builtin, both alias modes):
+    none has a group reference, every twin has no groups, and each
+    twin matches exactly the datagen lines (and their late-failing
+    variants) its capturing pattern matches."""
+    for name in sorted(_REGISTRY.patterns):
+        for alias_only in (False, True):
+            compiled = _compiled(name, alias_only)
+            eng = compiled.engine
+            C._to_sre_source(compiled.regex_src, capture_free=True, flavor=eng.flavor)
+            assert eng.match_pattern().groups == 0, name
+            for line in TWIN_LINES:
+                _assert_twin_agrees(compiled, line)
+
+
+@given(
+    st.sampled_from(sorted(_REGISTRY.patterns)),
+    st.booleans(),
+    st.one_of(
+        st.text(max_size=80),
+        st.text(string.printable, max_size=80),
+        st.sampled_from(TWIN_LINES),
+        st.tuples(st.sampled_from(TWIN_LINES), st.integers(0, 200)).map(
+            lambda t: t[0][: t[1]] + t[0][t[1] + 1 :]
+        ),
+    ),
+)
+@settings(max_examples=400, deadline=None)
+def test_twin_search_agrees_with_capturing_pattern(name, alias_only, text):
+    """Generated text, datagen lines, and lines with one character
+    deleted: the twin's ``search`` is None exactly when the capturing
+    pattern's is."""
+    _assert_twin_agrees(_compiled(name, alias_only), text)
+
+
+GROUP_REFERENCE_FORMS = [
+    r"(?<a>x)\k<a>",
+    r"(?<a>x)\g<a>",
+    r"(x)\1",
+    r"(?P<a>x)(?P=a)",
+    r"(?P<a>x)(?P>a)?",
+    r"(?<a>x)(?&a)?",
+    r"(?<a>x)?(?(a)y|z)",
+    r"x(?R)?",
+    r"(x)(?1)",
+    r"(x)(?0)?",
+    r"(?<1>x)",
+    r"(?+1)(x)",
+    r"(x)(?-1)",
+    r"(?|(a)|(b))c",
+]
+
+
+def test_group_references_fall_back_to_the_capturing_pattern():
+    """A pattern that refers to a group has no capture-free twin: the
+    walker refuses it, and the engine uses the capturing pattern."""
+    for src in GROUP_REFERENCE_FORMS:
+        for flavor in ("sre", "regex"):
+            with pytest.raises(C._HasGroupReference):
+                C._to_sre_source(src, capture_free=True, flavor=flavor)
+        try:
+            eng = C._engine_compile(src, {})
+        except C.RegexCompilationFailed:
+            continue  # not valid on either engine; the walker check is enough
+        assert eng.match_pattern() is eng.pattern, src
+
+
+def test_capture_free_rewrite_keeps_literals_and_lookarounds():
+    def free(src: str, flavor: str = "sre") -> str:
+        return C._to_sre_source(src, capture_free=True, flavor=flavor)
+
+    # every capturing form becomes (?: ...
+    assert free(r"(?<n>a)(?P<m>b)(c)") == r"(?:a)(?:b)(?:c)"
+    # ... literal parens, classes, lookbehinds and other (? forms stay
+    assert free(r"\((?<n>x)\)") == r"\((?:x)\)"
+    assert free(r"[(](?<n>x)") == r"[(](?:x)"
+    assert free(r"x[(?<]y") == r"x[(?<]y"
+    assert free(r"[]( ](x)") == r"[]( ](?:x)"
+    assert free(r"(?<=a)(?<!b)(?<n>c)") == r"(?<=a)(?<!b)(?:c)"
+    assert free(r"(?:a)(?>b)(?=c)(?!d)(?i)e") == r"(?:a)(?>b)(?=c)(?!d)(?i)e"
+    # relative flags are not relative group calls
+    assert free(r"(?-i:a)(x)") == r"(?-i:a)(?:x)"
+    # POSIX classes: sre refuses them, the regex-flavor twin keeps them
+    with pytest.raises(C._NotSreExpressible):
+        free(r"([[:alpha:]]+)")
+    assert free(r"([[:alpha:]]+)", "regex") == r"(?:[[:alpha:]]+)"
